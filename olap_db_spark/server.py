@@ -23,6 +23,60 @@ as they arrive. When the row cap truncates the result, the response
 carries ``X-Olap-Rows-Truncated: 1`` in the chunked trailer section and
 the job is cancelled via the per-request Spark job group.
 
+TabSeparated escapes backslash, tab, line feed and carriage return in
+string cells as a backslash followed by ``\\``, ``t``, ``n`` or ``r``, the
+way ClickHouse does (NULL is ``\\N``), so a multi-line cell such as an
+EXPLAIN plan stays one row. A negative or non-integer ``max_result_rows``
+is a 400.
+
+Query result cache (``query_cache.py``; ClickHouse 23.x has the same
+feature). Repeated dashboard queries are answered from the stored encoded
+body instead of re-running Spark jobs:
+
+- *What is cached*: the complete body of a plain query, per
+  ``(sql text, default_format)``, from its third cacheable run on (the
+  first two are only counted, so rarely repeated queries are never
+  recorded; ClickHouse's ``query_cache_min_query_runs`` = 2), when its
+  analyzed plan is deterministic,
+  reads only local file relations (``LogicalRelation`` over a
+  ``HadoopFsRelation``), ``VALUES``, ``range()`` or no table, and holds no
+  UDF and no clock/session/catalog function (``current_timestamp``,
+  ``now``, ``current_date``, ``localtimestamp``, ``current_database``,
+  ``current_user``, ...). The body is recorded while it streams to the
+  first client and kept only if the response completed: not truncated by
+  the row cap, no mid-stream error, client still connected.
+- *What bypasses it*: everything else streams exactly as without the
+  cache — engine verbs (UPSERT, DELETE, OPTIMIZE, VACUUM, RESTORE, SHOW
+  VERSIONS, READ VERSION), DDL/DML, SHOW, EXPLAIN, ``rand()``/``uuid()``,
+  UDFs, the functions above, non-file sources (JDBC, in-memory), and a
+  relation whose cached file listing no longer matches the disk.
+- *Invalidation*: before a hit is served the query is re-analyzed (as
+  every request is) and must ``sameResult`` the stored plan (a replaced
+  temp view or table changes it), the session SQL conf must equal the
+  stored one (``SET spark.sql.session.timeZone`` changes results), and
+  ``os.stat`` (size, mtime_ns) of every input file and of every directory
+  from each relation root down to them must be unchanged (an ``INSERT``
+  into an empty table changes the directory). The stat snapshot is taken
+  before the query runs. A failed check drops the entry and the request
+  runs as a miss whose result is stored again.
+- *Bounds*: an LRU over total body bytes, ``query_cache_bytes`` (default
+  64 MiB; 0 disables the cache); one entry holds at most 1 MiB
+  (ClickHouse's ``max_entry_size_in_bytes``) — a larger body stops being
+  recorded but keeps streaming — and at most 4096 entries are kept. A hit
+  is served only when its row count is within the request's
+  ``max_result_rows``.
+- *Header*: every 200 carries ``X-Olap-Query-Cache: hit|miss|bypass``
+  (``miss``: cacheable, computed now). Hits send the same
+  ``X-Olap-Rows-Limit`` header and ``X-Olap-Rows-Truncated: 0`` /
+  ``X-Olap-Rows-Sent`` trailers as the stream they replay.
+
+Latency: response sockets set ``TCP_NODELAY`` (a response is several
+small writes; with Nagle's algorithm each one after the first waits for
+the client's delayed ACK), and while any server runs the interpreter's
+GIL switch interval is 0.5 ms instead of 5 ms, because a handler thread
+spends a short query in py4j round trips that each have to take the GIL
+back from a thread encoding rows.
+
 Server model: a stdlib ThreadingHTTPServer on an ephemeral port. Spark
 query execution is driver-coordinated either way — an out-of-process
 client (tested via a subprocess urllib client) gets true remote SQL
@@ -38,14 +92,18 @@ user/password semantics), so a non-loopback bind requires the explicit
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import json
 import os
+import sys
 import threading
 import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
 from .api import OlapEngine
+from .query_cache import DEFAULT_CACHE_BYTES, QueryCache
 
 #: server-wide default row cap per request; override per request with the
 #: ClickHouse-named ``max_result_rows`` query parameter.
@@ -54,13 +112,33 @@ DEFAULT_MAX_ROWS = int(os.environ.get("OLAP_HTTP_MAX_ROWS", "100000"))
 _LOOPBACK_HOSTS = ("127.0.0.1", "localhost", "::1", "")
 
 
+# ClickHouse TabSeparated escaping of string cells
+_TSV_ESCAPES = str.maketrans({"\\": "\\\\", "\t": "\\t", "\n": "\\n", "\r": "\\r"})
+# cell types whose str() is already their TabSeparated text: tested by
+# exact type first so the common cells skip the slower checks below
+_TSV_PLAIN = frozenset((int, float, bool, decimal.Decimal, datetime.date, datetime.datetime))
+
+
+def _tsv_cell(v) -> str:
+    if v is None:
+        return "\\N"
+    if isinstance(v, str):
+        return v.translate(_TSV_ESCAPES)
+    return str(_plain(v))
+
+
 def _encode_row(cols, row, fmt: str) -> str:
     if fmt == "JSONEachRow":
         return (
             json.dumps(dict(zip(cols, [_plain(v) for v in row])), default=str)
             + "\n"
         )
-    return "\t".join("\\N" if v is None else str(_plain(v)) for v in row) + "\n"
+    return "\t".join([
+        str(v) if type(v) in _TSV_PLAIN
+        else v.translate(_TSV_ESCAPES) if type(v) is str
+        else _tsv_cell(v)
+        for v in row
+    ]) + "\n"
 
 
 def _plain(v):
@@ -68,6 +146,29 @@ def _plain(v):
     if hasattr(v, "asDict"):
         return v.asDict(recursive=True)
     return v
+
+
+# GIL switch interval while any server runs. A handler thread spends a
+# short query in py4j round trips and socket reads; each one has to take
+# the GIL back from a thread encoding rows, and with CPython's default
+# 5 ms interval that costs up to 5 ms per round trip.
+_SWITCH_INTERVAL_S = 0.0005
+_switch_lock = threading.Lock()
+_switch_users = 0
+_switch_saved = 0.0
+
+
+def _switch_interval(delta: int) -> None:
+    """Count a server in (+1) or out (-1); the first lowers the process's
+    switch interval, the last restores it."""
+    global _switch_users, _switch_saved
+    with _switch_lock:
+        if _switch_users == 0 and delta > 0:
+            _switch_saved = sys.getswitchinterval()
+            sys.setswitchinterval(min(_switch_saved, _SWITCH_INTERVAL_S))
+        _switch_users += delta
+        if _switch_users == 0:
+            sys.setswitchinterval(_switch_saved)
 
 
 class HttpSqlServer:
@@ -81,8 +182,12 @@ class HttpSqlServer:
         max_rows: int = DEFAULT_MAX_ROWS,
         allow_external: bool = False,
         allow_mutations: bool = False,
+        query_cache_bytes: int = DEFAULT_CACHE_BYTES,
     ):
-        """``allow_mutations`` (ADVICE r9): the engine-routed statements
+        """``query_cache_bytes``: byte budget of the result cache (see the
+        module docstring); 0 disables it.
+
+        ``allow_mutations`` (ADVICE r9): the engine-routed statements
         that rewrite data or truncate history at an arbitrary quoted path
         (UPSERT / DELETE / OPTIMIZE / VACUUM / RESTORE) answer 403 over
         the wire unless explicitly opted in — same pattern as the
@@ -100,10 +205,17 @@ class HttpSqlServer:
         self.engine = engine
         self.max_rows = max_rows
         self.allow_mutations = allow_mutations
+        self.query_cache = (
+            QueryCache(engine.spark, query_cache_bytes) if query_cache_bytes > 0 else None
+        )
         outer = self
 
         class Handler(BaseHTTPRequestHandler):
             protocol_version = "HTTP/1.1"  # required for chunked responses
+            # a response is several small writes (headers, chunks,
+            # trailers); with Nagle on, each one after the first waits for
+            # the client's delayed ACK (~40 ms on Linux)
+            disable_nagle_algorithm = True
 
             def log_message(self, *a):  # noqa: N802 - quiet
                 pass
@@ -118,6 +230,27 @@ class HttpSqlServer:
             def _chunk(self, data: bytes) -> None:
                 if data:
                     self.wfile.write(f"{len(data):x}\r\n".encode() + data + b"\r\n")
+
+            def _head(self, max_rows: int, cache_state: str) -> None:
+                self.send_response(200)
+                self.send_header("Content-Type", "text/plain; charset=utf-8")
+                self.send_header("Transfer-Encoding", "chunked")
+                self.send_header("Trailer", "X-Olap-Rows-Truncated, X-Olap-Rows-Sent")
+                self.send_header("X-Olap-Rows-Limit", str(max_rows))
+                self.send_header("X-Olap-Query-Cache", cache_state)
+                self.end_headers()
+
+            def _trailer(self, truncated: bool, sent: int) -> bool:
+                """Last chunk + trailers; False when the client is gone."""
+                try:
+                    self.wfile.write(
+                        b"0\r\n"
+                        + f"X-Olap-Rows-Truncated: {int(truncated)}\r\n"
+                          f"X-Olap-Rows-Sent: {sent}\r\n\r\n".encode()
+                    )
+                except ConnectionError:
+                    return False
+                return True
 
             def _run(self, query: str, fmt: str, max_rows: int):
                 from .api import MUTATING_VERBS, classify_statement
@@ -134,29 +267,53 @@ class HttpSqlServer:
                 spark = outer.engine.spark
                 group = f"http-sql-{uuid.uuid4().hex[:12]}"
                 done = object()
+                cache, key = outer.query_cache, (query, fmt)
+                cache_state, hit, proof = "bypass", None, None
                 try:
                     df = outer.engine.sql(query)
-                    cols = df.columns
-                    # Stream: one result partition on the driver at a time.
-                    # The job group makes the running Spark job cancellable
-                    # when the client disconnects or the row cap hits.
-                    spark.sparkContext.setJobGroup(group, query[:200], True)
-                    it = iter(df.toLocalIterator())
-                    # prime: execute the first partition BEFORE committing
-                    # to a 200, so analysis AND runtime errors surface as
-                    # clean 400s rather than a torn chunked stream
-                    first = next(it, done)
+                    if cache is not None and verb is None:
+                        cache_state, hit, proof = cache.consult(key, df, max_rows)
+                    if hit is None:
+                        cols = df.columns
+                        # Stream: one result partition in this process at
+                        # a time. The job group makes the running Spark job
+                        # cancellable when the client disconnects or the
+                        # row cap hits.
+                        spark.sparkContext.setJobGroup(group, query[:200], True)
+                        it = iter(df.toLocalIterator())
+                        # prime: execute the first partition BEFORE
+                        # committing to a 200, so analysis AND runtime
+                        # errors surface as clean 400s rather than a torn
+                        # chunked stream
+                        first = next(it, done)
                 except Exception as ex:  # noqa: BLE001 - surface to client
                     self._reply(400, f"{type(ex).__name__}: {ex}\n".encode())
                     return
-                self.send_response(200)
-                self.send_header("Content-Type", "text/plain; charset=utf-8")
-                self.send_header("Transfer-Encoding", "chunked")
-                self.send_header("Trailer", "X-Olap-Rows-Truncated, X-Olap-Rows-Sent")
-                self.send_header("X-Olap-Rows-Limit", str(max_rows))
-                self.end_headers()
+                if hit is not None:
+                    self._head(max_rows, "hit")
+                    try:
+                        self._chunk(hit.body)
+                    except ConnectionError:
+                        return
+                    self._trailer(False, hit.rows)
+                    return
+                self._head(max_rows, cache_state)
                 sent = 0
                 truncated = False
+                # the encoded body, kept while it fits one cache entry
+                record: list[bytes] | None = [] if proof is not None else None
+                recorded = 0
+
+                def emit(data: bytes) -> None:
+                    nonlocal record, recorded
+                    self._chunk(data)
+                    if record is not None:
+                        recorded += len(data)
+                        if recorded > cache.entry_cap:
+                            record = None  # too big to keep; keep streaming
+                        else:
+                            record.append(data)
+
                 try:
                     buf: list[str] = []
                     row = first
@@ -169,28 +326,40 @@ class HttpSqlServer:
                         buf.append(_encode_row(cols, row, fmt))
                         sent += 1
                         if len(buf) >= 1024:
-                            self._chunk("".join(buf).encode("utf-8"))
+                            emit("".join(buf).encode("utf-8"))
                             buf.clear()
                         row = next(it, done)
-                    self._chunk("".join(buf).encode("utf-8"))
-                except BrokenPipeError:
+                    emit("".join(buf).encode("utf-8"))
+                except ConnectionError:
                     spark.sparkContext.cancelJobGroup(group)
                     return
                 except Exception as ex:  # noqa: BLE001 - mid-stream failure
                     # headers are gone; do what ClickHouse does — append the
                     # error to the body, then terminate the stream cleanly
+                    record = None
                     self._chunk(f"__error__: {type(ex).__name__}: {ex}\n".encode())
                 finally:
                     spark.sparkContext.setJobGroup("", "", False)
+                if self._trailer(truncated, sent) and record is not None and not truncated:
+                    cache.put(key, proof, b"".join(record), sent)
+
+            def _limit(self, q: dict) -> int | None:
+                """The request's row cap; None after replying 400."""
+                raw = (q.get("max_result_rows") or [None])[0]
+                if raw is None:
+                    return outer.max_rows
                 try:
-                    # last chunk + trailers
-                    self.wfile.write(
-                        b"0\r\n"
-                        + f"X-Olap-Rows-Truncated: {int(truncated)}\r\n"
-                          f"X-Olap-Rows-Sent: {sent}\r\n\r\n".encode()
+                    n = int(raw)
+                except ValueError:
+                    n = -1
+                if n < 0:
+                    self._reply(
+                        400,
+                        f"max_result_rows must be a non-negative integer, "
+                        f"got {raw!r}\n".encode(),
                     )
-                except BrokenPipeError:
-                    pass
+                    return None
+                return n
 
             def do_GET(self):  # noqa: N802
                 u = urlparse(self.path)
@@ -202,11 +371,11 @@ class HttpSqlServer:
                 if not query:
                     self._reply(400, b"missing query parameter\n")
                     return
-                self._run(
-                    query,
-                    (q.get("default_format") or ["TabSeparated"])[0],
-                    int((q.get("max_result_rows") or [outer.max_rows])[0]),
-                )
+                max_rows = self._limit(q)
+                if max_rows is not None:
+                    self._run(
+                        query, (q.get("default_format") or ["TabSeparated"])[0], max_rows
+                    )
 
             def do_POST(self):  # noqa: N802
                 u = urlparse(self.path)
@@ -217,26 +386,32 @@ class HttpSqlServer:
                 if not query:
                     self._reply(400, b"missing query\n")
                     return
-                self._run(
-                    query,
-                    (q.get("default_format") or ["TabSeparated"])[0],
-                    int((q.get("max_result_rows") or [outer.max_rows])[0]),
-                )
+                max_rows = self._limit(q)
+                if max_rows is not None:
+                    self._run(
+                        query, (q.get("default_format") or ["TabSeparated"])[0], max_rows
+                    )
 
         self._httpd = ThreadingHTTPServer((host, port), Handler)
         self.host, self.port = self._httpd.server_address[:2]
         self._thread = threading.Thread(
             target=self._httpd.serve_forever, name="olap-http-sql", daemon=True
         )
+        self._counted = False  # whether this server holds a _switch_interval count
 
     def start(self) -> "HttpSqlServer":
         self._thread.start()
+        self._counted = True
+        _switch_interval(+1)
         return self
 
     def stop(self) -> None:
         self._httpd.shutdown()
         self._httpd.server_close()
         self._thread.join(timeout=10)
+        if self._counted:
+            self._counted = False
+            _switch_interval(-1)
 
     def __enter__(self) -> "HttpSqlServer":
         return self.start()

@@ -346,6 +346,21 @@ def test_maintenance_surface_over_the_wire(server, spark, tmp_path):
         get(f"RESTORE '{tbl}' TO VERSION 99")
 
 
+def test_switch_interval_is_lowered_while_a_server_runs(spark):
+    """Handler threads wait for the GIL on every py4j round trip; a running
+    server lowers the interpreter's switch interval and the last one to
+    stop restores it."""
+    eng = OlapEngine(SF, spark=spark)
+    outer = sys.getswitchinterval()
+    with HttpSqlServer(eng, query_cache_bytes=0):
+        assert sys.getswitchinterval() <= 0.0005
+        with HttpSqlServer(eng, query_cache_bytes=0) as inner:
+            pass
+        inner.stop()  # a second stop does not release the count twice
+        assert sys.getswitchinterval() <= 0.0005
+    assert sys.getswitchinterval() == outer
+
+
 def test_non_loopback_bind_refused(spark):
     """The unauthenticated endpoint refuses external binds without the
     explicit opt-in (round-2 ADVICE)."""
@@ -455,3 +470,59 @@ def test_table_root_confines_path_addressed_statements(spark, tmp_path):
         with pytest.raises(PermissionError):
             eng.sql(stmt)
     assert V.versions(outside) == [1]
+
+
+@pytest.mark.parametrize("cap", ["abc", "-1", "1.5"])
+def test_bad_max_result_rows_is_a_400(server, cap):
+    """A malformed row cap is a clean 400 on both verbs, not a dropped
+    connection."""
+    import urllib.error
+    import urllib.request
+
+    base = f"http://{server.host}:{server.port}/"
+    for req in (
+        urllib.request.Request(f"{base}?query=SELECT%201&max_result_rows={cap}"),
+        urllib.request.Request(
+            f"{base}?max_result_rows={cap}", data=b"SELECT 1", method="POST"
+        ),
+    ):
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            urllib.request.urlopen(req, timeout=60)
+        assert ei.value.code == 400
+        assert b"max_result_rows" in ei.value.read()
+
+
+def _tsv_unescape(cell: str) -> str:
+    out, it = [], iter(cell)
+    for ch in it:
+        out.append({"t": "\t", "n": "\n", "r": "\r", "\\": "\\"}[next(it)] if ch == "\\" else ch)
+    return "".join(out)
+
+
+def test_tab_separated_escapes_string_cells(server):
+    """A cell with a tab, newline, carriage return and backslash stays one
+    TabSeparated row and round-trips through ClickHouse's escaping."""
+    import urllib.parse
+    import urllib.request
+
+    value = "line one\tcol\nline two\\path\rend"
+    sql = (
+        "SELECT concat('line one', char(9), 'col', char(10), 'line two', "
+        "char(92), 'path', char(13), 'end') AS s, 2 AS n, CAST(NULL AS STRING) AS z"
+    )
+    body = urllib.request.urlopen(
+        f"http://{server.host}:{server.port}/?query={urllib.parse.quote(sql)}",
+        timeout=120,
+    ).read().decode()
+    assert body.count("\n") == 1 and body.endswith("\n")
+    cells = body[:-1].split("\t")
+    assert len(cells) == 3
+    assert _tsv_unescape(cells[0]) == value
+    assert cells[1:] == ["2", "\\N"]
+    # a multi-line EXPLAIN plan is one row too
+    plan = urllib.request.urlopen(
+        f"http://{server.host}:{server.port}/?query="
+        + urllib.parse.quote("EXPLAIN EXTENDED SELECT n_name FROM nation"),
+        timeout=120,
+    ).read().decode()
+    assert plan.count("\n") == 1 and "\\n" in plan
